@@ -40,7 +40,7 @@ DRIVER_MEM = "1g"
 # untimed passes before measuring: the JVM's JIT keeps compiling for
 # several passes (CPU per pass halves over the first five)
 WARMUP_PASSES = 2
-DEADLINE_S = 170  # a run still going after this is stopped and fails
+DEADLINE_S = 150  # a run still going after this is stopped and fails
 SELF_TIME_LAYERS = ("bench", "plans", "operators", "streaming", "spark")
 # per-layer metrics not in seconds
 LAYER_UNITS = {
@@ -256,9 +256,11 @@ class Run:
         trace = self.args.trace == 1
         jvm = self.spark.sparkContext._gateway.proc.pid
         cycles, measured = [], 0.0
-        while measured < self.args.seconds or (trace and len(cycles) % 2):
+        # traced runs measure passes in the order U T T U, repeated, so the
+        # warm-up trend cancels out of the traced-minus-untraced overhead
+        while measured < self.args.seconds or (trace and len(cycles) % 4):
             self.cycle_no = len(cycles)
-            traced = trace and self.cycle_no % 2 == 1
+            traced = trace and self.cycle_no % 4 in (1, 2)
             self.tracer.enabled = traced
             self._files_seen = {}
             c0 = tree_cpu_s(jvm) + self_cpu_s()
