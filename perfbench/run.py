@@ -1,15 +1,14 @@
-"""Benchmark for the engine: dashboard refresh, incremental history ingest
-and corpus curation.
+"""Benchmark for the engine: incremental history ingest and corpus curation.
 
-    python3 perfbench/run.py --workload dashboard_refresh --seed 1 --seconds 10 --trace 0
+    python3 perfbench/run.py --workload history_ingest --seed 1 --seconds 15 --trace 0
 
 Run from the root of a checkout.  One process runs one workload on
 ``local[<cores>]`` from one closed-loop client: set up ``SETUPS`` times
-(``setup_s`` is the median), one untimed warm-up pass, then whole passes
-until ``--seconds`` of measured time.  Every result is compared with its
-DuckDB oracle after the timed loop.  ``--trace 0`` prints the end-to-end
-metrics; ``--trace 1`` alternates untraced and traced passes, prints the
-per-layer metrics and writes the spans to ``perfbench/traces/``.  The
+(``setup_s`` is the median), ``WARMUP_PASSES`` untimed passes, then whole
+passes until ``--seconds`` of measured time.  Every result is compared
+with its DuckDB oracle after the timed loop.  ``--trace 0`` prints the
+end-to-end metrics; ``--trace 1`` mixes untraced and traced passes, prints
+the per-layer metrics and writes the spans to ``perfbench/traces/``.  The
 last line of stdout is one JSON object.
 
 Everything else the run writes (inputs, Spark local dirs, warehouse,
