@@ -1,47 +1,64 @@
 """Seeded generators for the benchmark's input tables.
 
-Each generator writes one parquet file shaped like the engine's driver
-tables (TESTDATA.md): the same columns, types and value domains, so the
-registered queries and their DuckDB oracles run on them unchanged.  The
-same seed gives the same inputs.
+Each generator writes one parquet file with the columns and types of the
+engine's test table of that name (TESTDATA.md) and draws its values to fit
+the shape profile in ``shape.json``, which ``shape_profile.py`` measured on
+the sf0.1 test tables (``shape_profile.py DIR --compare`` prints both side
+by side).  The caller picks the row count.  The same seed gives the same
+inputs.
 """
 
 from __future__ import annotations
+
+import functools
+import json
+import os
 
 import numpy as np
 import pandas as pd
 import pyarrow as pa
 import pyarrow.parquet as pq
 
-EVENT_TYPES = ("click", "view", "purchase", "signup", "error")
-VOCAB = (
-    "a the data spark table column row key value query join filter group sort "
-    "order hash merge window stream batch vector scan agg line part customer "
-    "big small fast slow"
-).split()
-LANGS = ("en", "zh", "es", "fr", "de")
-LANG_P = (0.42, 0.145, 0.145, 0.145, 0.145)
-T0 = np.datetime64("2024-01-01T00:00:00", "us")
+SHAPE_PATH = os.path.join(os.path.dirname(os.path.abspath(__file__)), "shape.json")
 HOUR_US = 3_600_000_000
+DUP_TOKEN = "dup"  # the word a near-duplicate document appends to an earlier one
+
+
+@functools.cache
+def shape(table: str) -> dict:
+    """The profile's figures for ``table``."""
+    with open(SHAPE_PATH) as f:
+        return json.load(f)[table]
+
+
+def t0() -> np.datetime64:
+    """Midnight of the profile's first event."""
+    return np.datetime64(shape("events")["start"].replace(" ", "T"), "us")
 
 
 def _write(df: pd.DataFrame, path: str, schema: pa.Schema) -> None:
     pq.write_table(pa.Table.from_pandas(df, schema=schema, preserve_index=False), path)
 
 
-def events(rng: np.random.Generator, n: int, hours: int, path: str) -> pd.DataFrame:
-    """``n`` events spread uniformly over ``hours`` hours from 2024-01-01,
-    numbered in arrival order; 1500 users, five equally likely types,
-    exponential ``value`` with two decimals (mean 50)."""
-    ts = T0 + np.sort(rng.integers(0, hours * HOUR_US, n)).astype("timedelta64[us]")
+def _draw(rng: np.random.Generator, shares: dict, n: int) -> np.ndarray:
+    return np.asarray(list(shares))[rng.choice(len(shares), n, p=np.asarray(list(shares.values())) / sum(shares.values()))]
+
+
+def events(rng: np.random.Generator, n: int, path: str) -> pd.DataFrame:
+    """``n`` events at the profile's arrival rate from its start, uniform in
+    time and numbered in arrival order; users uniform, the profile's
+    event-type mix, exponential ``value`` with the profile's mean."""
+    ev = shape("events")
+    hours = n / ev["rows_per_hour"]
+    ts = t0() + np.sort(rng.integers(0, int(hours * HOUR_US), n)).astype("timedelta64[us]")
     df = pd.DataFrame(
         {
             "event_id": np.arange(n, dtype=np.int64),
             "ts": ts,
-            "user_id": rng.integers(0, 1500, n).astype(np.int64),
-            "event_type": np.asarray(EVENT_TYPES)[rng.integers(0, len(EVENT_TYPES), n)],
-            "value": np.round(rng.exponential(50.0, n), 2),
-            "props": [f'{{"k": {k}}}' for k in rng.integers(0, 100, n)],
+            "user_id": rng.integers(0, ev["users"], n).astype(np.int64),
+            "event_type": _draw(rng, ev["event_type"], n),
+            "value": np.round(rng.exponential(ev["value_mean"], n), ev["value_decimals"]),
+            "props": [f'{{"k": {k}}}' for k in rng.integers(0, ev["props_keys"], n)],
         }
     )
     schema = pa.schema(
@@ -58,23 +75,25 @@ def events(rng: np.random.Generator, n: int, hours: int, path: str) -> pd.DataFr
     return df
 
 
-def documents(rng: np.random.Generator, n: int, dup_share: float, path: str) -> None:
-    """``n`` documents of 10-99 words from a 30-word vocabulary; a
-    ``dup_share`` of them repeat an earlier document with one word appended,
-    which the near-duplicate stages must find."""
+def documents(rng: np.random.Generator, n: int, path: str) -> None:
+    """``n`` documents of uniformly many words from the profile's
+    vocabulary; the profile's share of them repeat an earlier document with
+    one word appended, which the near-duplicate stages must find."""
+    doc = shape("documents")
+    vocab = np.asarray(doc["vocab"])
     texts: list[str] = []
     for i in range(n):
-        if i > 0 and rng.random() < dup_share:
-            texts.append(texts[int(rng.integers(0, i))] + " dup")
+        if i > 0 and rng.random() < doc["dup_share"]:
+            texts.append(texts[int(rng.integers(0, i))] + " " + DUP_TOKEN)
         else:
-            words = np.asarray(VOCAB)[rng.integers(0, len(VOCAB), int(rng.integers(10, 100)))]
-            texts.append(" ".join(words))
+            k = int(rng.integers(doc["words_min"], doc["words_max"] + 1))
+            texts.append(" ".join(vocab[rng.integers(0, len(vocab), k)]))
     df = pd.DataFrame(
         {
             "doc_id": np.arange(n, dtype=np.int64),
             "text": texts,
-            "lang": np.asarray(LANGS)[rng.choice(len(LANGS), n, p=LANG_P)],
-            "source": [f"src{i % 20}" for i in range(n)],
+            "lang": _draw(rng, doc["lang"], n),
+            "source": [f"src{i % doc['sources']}" for i in range(n)],
             "n_chars": np.array([len(t) for t in texts], dtype=np.int64),
         }
     )
@@ -90,15 +109,17 @@ def documents(rng: np.random.Generator, n: int, dup_share: float, path: str) -> 
     _write(df, path, schema)
 
 
-def embeddings(rng: np.random.Generator, n: int, dim: int, path: str) -> None:
-    """``n`` unit-norm float32 vectors with labels 0-9."""
-    v = rng.standard_normal((n, dim))
+def embeddings(rng: np.random.Generator, n: int, path: str) -> None:
+    """``n`` isotropic unit-norm float32 vectors of the profile's dimension,
+    labels uniform over its label count."""
+    emb = shape("embeddings")
+    v = rng.standard_normal((n, emb["dim"]))
     v /= np.linalg.norm(v, axis=1, keepdims=True)
     df = pd.DataFrame(
         {
             "vec_id": np.arange(n, dtype=np.int64),
             "embedding": list(v.astype(np.float32)),
-            "label": rng.integers(0, 10, n).astype(np.int32),
+            "label": rng.integers(0, emb["labels"], n).astype(np.int32),
         }
     )
     schema = pa.schema(

@@ -63,6 +63,12 @@ def hwm_mb(pid: int) -> float:
     return 0.0
 
 
+def reset_hwm(pid: int) -> None:
+    """Set the peak resident set of ``pid`` back to its current RSS."""
+    with open(f"/proc/{pid}/clear_refs", "w") as f:
+        f.write("5")
+
+
 class SparkCounters:
     """Totals over Spark's executors, read from the status store."""
 

@@ -1,6 +1,6 @@
 """Benchmark for the engine: incremental history ingest and corpus curation.
 
-    python3 perfbench/run.py --workload history_ingest --seed 1 --seconds 15 --trace 0
+    python3 perfbench/run.py --workload history_ingest --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout.  One process runs one workload on
 ``local[<cores>]`` from one closed-loop client: set up ``SETUPS`` times
@@ -9,7 +9,9 @@ passes until ``--seconds`` of measured time.  Every result is compared
 with its DuckDB oracle after the timed loop.  ``--trace 0`` prints the
 end-to-end metrics; ``--trace 1`` mixes untraced and traced passes, prints
 the per-layer metrics and writes the spans to ``perfbench/traces/``.  The
-last line of stdout is one JSON object.
+last line of stdout is one JSON object.  Metric units come from
+BENCHMARK.json.  Peak RSS is reset after the warm-up, so ``peak_rss_mb``
+covers the measured passes only.
 
 Everything else the run writes (inputs, Spark local dirs, warehouse,
 pipeline output) goes under ``perfbench/.work/`` and is deleted at exit.
@@ -36,29 +38,26 @@ SETUPS = 3  # set-ups per run; setup_s is their median
 # driver JVM heap: the inputs need far less, and a small cap bounds how much
 # peak RSS varies with when the collector chooses to grow the heap
 DRIVER_MEM = "1g"
-# untimed passes before measuring: the JVM's JIT keeps compiling for
-# several passes (CPU per pass halves over the first five)
-WARMUP_PASSES = 2
-DEADLINE_S = 150  # a run still going after this is stopped and fails
+# untimed passes before measuring.  The JVM's JIT keeps compiling for
+# several passes (CPU per pass falls by about half over the first five),
+# so the measured passes still speed up; one pass is what the run budget
+# leaves room for, and a second did not flatten the trend
+WARMUP_PASSES = 1
+DEADLINE_S = 140  # a run still going after this is stopped and fails
+STOP_DEADLINE_S = 25  # stopping Spark longer than this kills its processes
 SELF_TIME_LAYERS = ("bench", "plans", "operators", "streaming", "spark")
-# per-layer metrics not in seconds
-LAYER_UNITS = {
-    "plans.build_jobs": "count",
-    "plans.action_jobs": "count",
-    "streaming.input_mb_per_batch": "MB",
-    "streaming.instances_touched_share": "ratio",
-    "sources.files_per_batch": "count",
-    "sources.accumulator_files_end": "count",
-    "sources.output_files_end": "count",
-    "spark.jobs_per_op": "count",
-    "spark.tasks_per_op": "count",
-    "spark.shuffle_write_mb_per_op": "MB",
-    "spark.input_mb_per_op": "MB",
-    "spark.failed_tasks": "count",
-    "spark.cpu_util": "ratio",
-    "persist.storage_mb_max": "MB",
-    "sample.ops": "count",
-}
+
+
+class RunTimeout(BaseException):
+    """The run passed ``DEADLINE_S``.  Not an ``Exception``, so the handler
+    that records a failed operation lets it through to ``main``."""
+
+
+def units(kind: str) -> dict[str, str]:
+    """Metric name -> unit for ``kind`` ("end_to_end" or "per_layer"),
+    as BENCHMARK.json declares them."""
+    with open(os.path.join(ROOT, "BENCHMARK.json")) as f:
+        return {m["name"]: m["unit"] for m in json.load(f)[kind]}
 
 
 def _median(xs) -> float:
@@ -130,11 +129,11 @@ class Run:
         """Stop Spark, the JVM and its Python workers, and wait for them."""
         from pyspark import SparkContext
 
-        from probe import descendants
+        import probe
 
         gw = SparkContext._gateway
         proc = getattr(gw, "proc", None)
-        pids = descendants(proc.pid) if proc else []
+        pids = probe.descendants(proc.pid) if proc else []
         if self.spark is not None:
             self.spark.stop()
         if gw is not None:
@@ -224,7 +223,7 @@ class Run:
         import numpy as np
 
         import inputs
-        from probe import SparkCounters, hwm_mb, self_cpu_s, tree_cpu_s
+        from probe import SparkCounters, hwm_mb, reset_hwm, self_cpu_s, tree_cpu_s
         from tests.oracle_harness import canonicalize
 
         self._t = START
@@ -250,10 +249,15 @@ class Run:
         self.records.clear()
         self.phase("warm-up")
         sentinel = self.sentinel()
+        print(f"machine sentinel: {sentinel:.4f} s")
         self.phase("sentinel")
 
         trace = self.args.trace == 1
         jvm = self.spark.sparkContext._gateway.proc.pid
+        # peak RSS covers the measured passes only, not the inputs, the
+        # oracles and the set-up that ran in these processes before them
+        reset_hwm(jvm)
+        reset_hwm(os.getpid())
         cycles, measured = [], 0.0
         # traced runs measure passes in the order U T T U, repeated, so the
         # warm-up trend cancels out of the traced-minus-untraced overhead
@@ -313,14 +317,14 @@ class Run:
         beyond = sum(x > t for x in lat)
         print(f"samples: {n} operations in {len(cycles)} passes, {wall:.2f} s; tail is p{pct:.1f} with {beyond} beyond it")
         return {
-            "setup_s": (setup["setup_s"], "s"),
-            "latency_p50_s": (_median(lat), "s"),
-            "latency_tail_s": (t, "s"),
-            "ops_per_s": (n / wall, "1/s"),
-            "rows_per_s": (sum(r["rows"] for r in self.records) / wall, "rows/s"),
-            "cpu_s_per_op": (sum(c["cpu"] for c in cycles) / n, "s"),
-            "peak_rss_mb": (peak_rss, "MB"),
-            "success_rate": (1 - failed / n, "ratio"),
+            "setup_s": setup["setup_s"],
+            "latency_p50_s": _median(lat),
+            "latency_tail_s": t,
+            "ops_per_s": n / wall,
+            "rows_per_s": sum(r["rows"] for r in self.records) / wall,
+            "cpu_s_per_op": sum(c["cpu"] for c in cycles) / n,
+            "peak_rss_mb": peak_rss,
+            "success_rate": 1 - failed / n,
         }
 
     def layer_metrics(self, setup, sentinel, cycles) -> dict:
@@ -388,7 +392,24 @@ class Run:
         }
         for layer in SELF_TIME_LAYERS:
             m[f"trace.self_s.{layer}"] = self_s.get(layer, 0.0) / n
-        return {k: (v, LAYER_UNITS.get(k, "s")) for k, v in m.items()}
+        return m
+
+
+def kill_descendants() -> None:
+    """Kill every process this one started, and reap them."""
+    import probe
+
+    for pid in probe.descendants(os.getpid()):
+        if pid != os.getpid():
+            try:
+                os.kill(pid, signal.SIGKILL)
+            except ProcessLookupError:
+                pass
+    while True:
+        try:
+            os.wait()
+        except ChildProcessError:
+            break
 
 
 def parse_args(argv):
@@ -403,7 +424,7 @@ def parse_args(argv):
 
 
 def _deadline(signum, frame):
-    raise TimeoutError(f"run exceeded {DEADLINE_S} s")
+    raise RunTimeout(f"run exceeded {DEADLINE_S} s")
 
 
 def main(argv=None) -> int:
@@ -434,21 +455,28 @@ def main(argv=None) -> int:
     try:
         run = Run(args, WORKLOADS[args.workload](), work)
         result = run.main()
-    except Exception:
+        declared = units("per_layer" if args.trace else "end_to_end")
+        if set(result["metrics"]) != set(declared):
+            raise ValueError(f"metrics differ from BENCHMARK.json: {sorted(set(result['metrics']) ^ set(declared))}")
+    except (Exception, RunTimeout):
         traceback.print_exc()
         return 1
     finally:
+        signal.alarm(STOP_DEADLINE_S)
+        try:
+            if run is not None and run.spark is not None:
+                run.stop()
+        except RunTimeout:
+            kill_descendants()
         signal.alarm(0)
-        if run is not None and run.spark is not None:
-            run.stop()
         shutil.rmtree(work, ignore_errors=True)
         try:
             os.rmdir(os.path.join(BENCH, ".work"))
         except OSError:
             pass
-    for name, (value, unit) in result["metrics"].items():
-        print(f"{args.workload:18s} {name:40s} {value:14.6f} {unit}")
-    result["metrics"] = {k: {"value": v, "unit": u} for k, (v, u) in result["metrics"].items()}
+    for name, value in result["metrics"].items():
+        print(f"{args.workload:18s} {name:40s} {value:14.6f} {declared[name]}")
+    result["metrics"] = {k: {"value": v, "unit": declared[k]} for k, v in result["metrics"].items()}
     print(json.dumps(result))
     return 0
 

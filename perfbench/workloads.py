@@ -79,24 +79,32 @@ class CorpusCuration:
 
     name = "corpus_curation"
     tables = ("documents", "embeddings")
+    # an odd number of stages of distinct cost: the median operation then
+    # falls inside one stage's samples (llm_knn_join) whatever the number of
+    # passes, not between two stages
     names = (
         "llm_quality_scores",
         "llm_minhash_neardup",
         "llm_knn_join",
+        "llm_knn_cosine",
         "llm_curation_gate",
     )
-    DOCS = 500
-    VECS = 500
+    # both tables are cut to the same share of the sf0.1 test tables' row
+    # counts (shape.json), so that the warm-up and several measured passes
+    # fit a run
+    SCALE = 0.1
 
     def __init__(self):
         self.queries = {n: query(n) for n in self.names}
         self.expected: dict[str, list] = {}
+        self.docs = round(inputs.shape("documents")["rows"] * self.SCALE)
+        self.vecs = round(inputs.shape("embeddings")["rows"] * self.SCALE)
         # documents + embeddings consumed per pass, spread over its stages
-        self.rows_per_op = (self.DOCS + self.VECS) / len(self.names)
+        self.rows_per_op = (self.docs + self.vecs) / len(self.names)
 
     def make_inputs(self, rng: np.random.Generator, data_dir: str) -> None:
-        inputs.documents(rng, self.DOCS, 0.05, f"{data_dir}/documents.parquet")
-        inputs.embeddings(rng, self.VECS, 64, f"{data_dir}/embeddings.parquet")
+        inputs.documents(rng, self.docs, f"{data_dir}/documents.parquet")
+        inputs.embeddings(rng, self.vecs, f"{data_dir}/embeddings.parquet")
 
     def compute_expected(self, data_dir: str, tmp: str) -> None:
         con = duck(data_dir, self.tables, tmp)
@@ -129,9 +137,11 @@ class CorpusCuration:
 class HistoryIngest:
     name = "history_ingest"
     tables = ("events",)
+    # the reference's 6-hour hop at the sf0.1 events table's arrival rate
+    # (shape.json: ~833 events a batch); a pass replays the first BATCHES
+    # hops, so every pass stays in the early-history regime
     BATCHES = 5
     BATCH_HOURS = 6
-    ROWS_PER_BATCH = 400
 
     def __init__(self):
         self.alarm = query("ri_freshness_alarm")
@@ -139,9 +149,9 @@ class HistoryIngest:
         self.passes = 0
 
     def make_inputs(self, rng: np.random.Generator, data_dir: str) -> None:
-        n = self.BATCHES * self.ROWS_PER_BATCH
-        ev = inputs.events(rng, n, self.BATCHES * self.BATCH_HOURS, f"{data_dir}/events.parquet")
-        window = ((ev["ts"] - inputs.T0) // np.timedelta64(self.BATCH_HOURS, "h")).to_numpy()
+        n = int(self.BATCHES * self.BATCH_HOURS * inputs.shape("events")["rows_per_hour"])
+        ev = inputs.events(rng, n, f"{data_dir}/events.parquet")
+        window = ((ev["ts"] - inputs.t0()) // np.timedelta64(self.BATCH_HOURS, "h")).to_numpy()
         late = (rng.random(n) < rng.uniform(0.05, 0.15)) & (window < self.BATCHES - 1)
         arrival = window + late
         self.batch_rows = np.bincount(arrival, minlength=self.BATCHES).tolist()
