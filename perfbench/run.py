@@ -3,7 +3,7 @@
     python3 perfbench/run.py --workload history_ingest --seed 1 --seconds 20 --trace 0
 
 Run from the root of a checkout.  One process runs one workload on
-``local[<cores>]`` from one closed-loop client: set up ``SETUPS`` times
+``local[<half the cores>]`` from one closed-loop client: set up ``SETUPS`` times
 (``setup_s`` is the median), ``WARMUP_PASSES`` untimed passes, then whole
 passes until ``--seconds`` of measured time.  Every result is compared
 with its DuckDB oracle after the timed loop.  ``--trace 0`` prints the
@@ -39,10 +39,11 @@ SETUPS = 3  # set-ups per run; setup_s is their median
 # peak RSS varies with when the collector chooses to grow the heap
 DRIVER_MEM = "1g"
 # untimed passes before measuring.  The JVM's JIT keeps compiling for
-# several passes (CPU per pass falls by about half over the first five),
-# so the measured passes still speed up; one pass is what the run budget
-# leaves room for, and a second did not flatten the trend
-WARMUP_PASSES = 1
+# several passes (CPU per pass falls by about half over the first eight);
+# the first pass is the cold one and the second is still about a tenth
+# slower than the third, so measuring from the third keeps the trend inside
+# the measured window small
+WARMUP_PASSES = 2
 DEADLINE_S = 140  # a run still going after this is stopped and fails
 STOP_DEADLINE_S = 25  # stopping Spark longer than this kills its processes
 SELF_TIME_LAYERS = ("bench", "plans", "operators", "streaming", "spark")
@@ -359,7 +360,7 @@ class Run:
         traced_wall = sum(c["wall"] for c in cycles if c["traced"])
         untraced_wall = sum(c["wall"] for c in cycles if not c["traced"])
         self_s = self.tracer.self_time_by_layer(spans)
-        cores = self.spark.sparkContext.defaultParallelism
+        cores = len(os.sched_getaffinity(0))  # the machine's, not Spark's task threads
         m = {
             "session.start_s": setup["session.start_s"],
             "tables.warm_s": setup["tables.warm_s"],
@@ -441,7 +442,11 @@ def main(argv=None) -> int:
     work = tempfile.mkdtemp(prefix=f"{args.workload}-", dir=os.path.join(BENCH, ".work"))
     os.makedirs(f"{work}/tmp")
     tempfile.tempdir = f"{work}/tmp"
-    cores = str(len(os.sched_getaffinity(0)))
+    # Spark's task threads get half the cores: the JIT compiler and GC
+    # threads, the Python driver and the Python workers need the rest.  With
+    # as many task threads as cores, CPU per operation varied about three
+    # times as much from run to run and latency was no lower
+    cores = str(max(1, len(os.sched_getaffinity(0)) // 2))
     os.environ.update(
         SPARK_GRAFT_CPUS=cores,
         SPARK_GRAFT_DRIVER_MEM=DRIVER_MEM,

@@ -18,7 +18,7 @@ next operation starts when the previous one has returned).
 Together they run every layer: ``session``, ``tables``, ``plans``,
 ``operators``, ``persist``, ``sources``, ``streaming`` and ``llm``.  The
 stage set is a subset of the registry, one or two stages per family (text,
-dedup, similarity, curation), so that the warm-up pass and the measured
+dedup, similarity, curation), so that the warm-up passes and the measured
 passes fit the run budget.
 """
 
