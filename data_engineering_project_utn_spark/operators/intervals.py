@@ -134,7 +134,7 @@ def ingestion_intervals_salted(
     )
 
 
-def output_table(flat: DataFrame, intervals: DataFrame | None = None) -> DataFrame:
+def output_table(flat: DataFrame) -> DataFrame:
     """Annotate queries with bracketing ingestion windows + freshness deltas.
 
     Reproduces `Dashboard_Historical_Final.py:241-312` (with the as-of
@@ -195,13 +195,6 @@ def output_table(flat: DataFrame, intervals: DataFrame | None = None) -> DataFra
     intervals; measure-zero tie divergence, documented per SURVEY.md §7.2).
     ``query_id`` completes the sort as the same tiebreaker the interval
     lead() always used.
-
-    ``intervals`` is accepted for backward compatibility and is NOT
-    consumed: the boundary rows and their lead semantics are derived from
-    ``flat`` inside the single window pass (every caller passed
-    ``ingestion_intervals(flat)``, whose semantics this reproduces —
-    oracle-gated by ri_output_freshness and the bracket-join parity
-    tests).
     """
     is_b = F.col("query_type").isin(*INGESTION_QUERY_TYPES)
     match_table = F.when(

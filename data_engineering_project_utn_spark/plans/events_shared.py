@@ -141,9 +141,8 @@ def _output_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     gets from DuckDB table materialization, SURVEY §4.1)."""
     key = (id(spark), sf_dir)
     if key not in _OUTPUT_TABLE_CACHE:
-        flat = events_as_flat(spark, sf_dir)
         _OUTPUT_TABLE_CACHE[key] = iv_ops.output_table(
-            flat, iv_ops.ingestion_intervals(flat)
+            events_as_flat(spark, sf_dir)
         ).persist()
     return _OUTPUT_TABLE_CACHE[key]
 

@@ -784,87 +784,6 @@ def stateful_ema(
     )
 
 
-class EMAStatefulProcessor:
-    """Spark 4 ``transformWithStateInPandas`` processor for the stress-index
-    EMA — the modern stateful API (typed per-key ValueState, explicit
-    lifecycle, timer support) superseding ``applyInPandasWithState``.
-    Identical recurrence and state content to ``make_ema_updater``; the
-    parity test holds both implementations to the same output on the same
-    stream.
-
-    Defined lazily as a subclass factory because pyspark imports
-    StatefulProcessor machinery on first use.
-    """
-
-    @staticmethod
-    def build(value_col: str, order_col: str, alpha_short: float, alpha_long: float):
-        from pyspark.sql.streaming.stateful_processor import (
-            StatefulProcessor,
-            StatefulProcessorHandle,
-        )
-
-        class _EMA(StatefulProcessor):
-            def init(self, handle: StatefulProcessorHandle) -> None:
-                self._state = handle.getValueState(
-                    "ema", "ema_short double, ema_long double, n_obs bigint"
-                )
-
-            def handleInputRows(self, key, rows, timer_values):
-                if self._state.exists():
-                    ema_s, ema_l, n = self._state.get()
-                else:
-                    ema_s = ema_l = None
-                    n = 0
-                pdf = pd.concat(list(rows), ignore_index=True)
-                pdf = pdf.sort_values(order_col, kind="mergesort")
-                for x in pdf[value_col].astype(float):
-                    if ema_s is None:
-                        ema_s = ema_l = x
-                    else:
-                        ema_s = alpha_short * x + (1.0 - alpha_short) * ema_s
-                        ema_l = alpha_long * x + (1.0 - alpha_long) * ema_l
-                    n += 1
-                self._state.update((ema_s, ema_l, n))
-                yield pd.DataFrame(
-                    {
-                        "key": [str(key[0])],
-                        "ema_short": [ema_s],
-                        "ema_long": [ema_l],
-                        "n_obs": [n],
-                    }
-                )
-
-            def close(self) -> None:
-                pass
-
-        return _EMA()
-
-
-def stateful_ema_tws(
-    stream: DataFrame,
-    key_col: str,
-    value_col: str,
-    order_col: str,
-    alpha_short: float = 0.02,
-    alpha_long: float = 0.005,
-) -> DataFrame:
-    """Streaming EMA via the Spark 4 ``transformWithStateInPandas`` API —
-    same semantics as ``stateful_ema`` (held to parity by
-    ``TestStatefulEMATws``); prefer this on Spark ≥ 4 deployments where the
-    RocksDB state store and state TTL/timers matter.  Requires the RocksDB
-    state store provider AND google.protobuf on the driver (the TWS
-    state-server protocol) — the parity test skips with a named reason
-    where protobuf is absent."""
-    return stream.groupBy(F.col(key_col)).transformWithStateInPandas(
-        statefulProcessor=EMAStatefulProcessor.build(
-            value_col, order_col, alpha_short, alpha_long
-        ),
-        outputStructType=EMA_OUTPUT_SCHEMA,
-        outputMode="Update",
-        timeMode="None",
-    )
-
-
 def incremental_dedup_batch_fn(
     corpus: DataFrame,
     sink,
@@ -1572,41 +1491,6 @@ def make_semantic_ingest_batch_fn(
 # ---------------------------------------------------------------------------
 
 
-def hopping_backfill(
-    flat: DataFrame,
-    start,
-    end,
-    hop_hours: float = 6.0,
-):
-    """T4: the expert plane's hopping-window incremental loop
-    (`Dashboard_Historical_Final.py:176-333`: process [start, end], then
-    start = end + 6 h, end += 6 h 10 min) as a batch backfill generator.
-
-    Each hop yields the freshness output recomputed over all data seen so
-    far (stateless recompute, T5): late rows and cross-window interval
-    links self-heal, where the reference's per-window INSERT + UPDATE
-    repair could leave stale ``next_timestamp`` values.  The final yield is
-    identical to the one-shot batch ``output_table`` over the same range
-    (tested).
-
-    At scale each hop's recompute is bounded to the (instance, table)
-    partitions the new window touched — the window key — via dynamic
-    partition overwrite of the output table.
-    """
-    from datetime import timedelta
-
-    from data_engineering_project_utn_spark.operators import intervals as iv_ops
-
-    cur = start
-    while cur < end:
-        cur = min(cur + timedelta(hours=hop_hours), end)
-        seen = flat.filter(
-            (F.col("arrival_timestamp") >= F.lit(start))
-            & (F.col("arrival_timestamp") < F.lit(cur))
-        )
-        yield cur, iv_ops.output_table(seen, iv_ops.ingestion_intervals(seen))
-
-
 class IncrementalHistoricalPipeline:
     """The expert-plane incremental loop (`update_tables_periodically`,
     `Dashboard_Historical_Final.py:160-333`) as a foreachBatch runner.
@@ -1632,16 +1516,11 @@ class IncrementalHistoricalPipeline:
       batch's touched instances (partition pruning — input is bounded by
       the touched partitions' history, not total history) and rewrites only
       those instances' output partitions via dynamic partition overwrite.
-    * **Two pruning regimes.** Up to ``max_isin_instances`` touched
-      instances, the batch's distinct instance ids are collected and the
-      accumulator read carries an ``isin`` partition filter — driver state
-      and filter expression both model-size.  A *wide* batch (mass
-      backfill touching millions of instances) would make both the driver
-      list and the In expression the bottleneck, so above the threshold
-      the read prunes via a broadcast left-semi join against the
-      just-written batch partition's own distinct-instances frame instead:
-      no driver list, no O(touched) expression tree, and the touched-
-      discovery scan is itself partition-pruned on ``_batch_id``.
+    * **Driver-side id list.** The touched ids are collected and filtered
+      with ``isin`` because the (_batch_id, instance_id) layout writes one
+      accumulator directory per touched instance, so a batch touching
+      millions of instances would write millions of directories long
+      before the In list grew too large.
 
     Read the output back with ``read_output`` (restores canonical column
     order/types — Hive-style partition columns come back as inferred ints
@@ -1653,12 +1532,10 @@ class IncrementalHistoricalPipeline:
         spark: SparkSession,
         accumulator_path: str,
         output_path: str,
-        max_isin_instances: int = 1000,
     ):
         self.spark = spark
         self.accumulator_path = accumulator_path
         self.output_path = output_path
-        self.max_isin_instances = int(max_isin_instances)
 
     def accumulated_for(self, instances: list) -> DataFrame:
         """Accumulator rows for the given instances, via partition pruning
@@ -1671,25 +1548,6 @@ class IncrementalHistoricalPipeline:
             "_batch_id"
         )
 
-    def accumulated_for_batch(self, batch_id: int) -> DataFrame:
-        """Accumulator rows for every instance batch ``batch_id`` touched,
-        pruned by a broadcast left-semi join instead of a driver-side id
-        list — the wide-batch path.  The touched-instances side reads only
-        the batch's own ``_batch_id`` partition (partition pruning), stays
-        distributed end-to-end, and broadcasts ids (bytes, not an
-        expression tree), so a batch touching millions of instances never
-        builds an In expression or a driver list."""
-        acc = self.spark.read.parquet(self.accumulator_path)
-        touched = (
-            acc.filter(F.col("_batch_id") == int(batch_id))
-            .select("instance_id")
-            .distinct()
-        )
-        flat = acc.join(F.broadcast(touched), "instance_id", "left_semi")
-        return flat.withColumn("instance_id", F.col("instance_id").cast("long")).drop(
-            "_batch_id"
-        )
-
     def process_batch(self, batch_df: DataFrame, batch_id: int) -> None:
         # Null instance_id would land in the Hive default partition and then
         # never match the isin() partition filter (NULL semantics) — silently
@@ -1698,15 +1556,11 @@ class IncrementalHistoricalPipeline:
         batch_df = batch_df.withColumn(
             "instance_id", F.coalesce(F.col("instance_id").cast("long"), F.lit(-1))
         )
-        # Collect at most threshold+1 distinct ids: enough to decide the
-        # regime without ever materializing a wide batch's full id set.
-        probe = (
-            batch_df.select("instance_id")
-            .distinct()
-            .limit(self.max_isin_instances + 1)
-            .collect()
-        )
-        if not probe:
+        touched = [
+            r["instance_id"]
+            for r in batch_df.select("instance_id").distinct().collect()
+        ]
+        if not touched:
             return
         (
             batch_df.withColumn("_batch_id", F.lit(int(batch_id)))
@@ -1715,11 +1569,7 @@ class IncrementalHistoricalPipeline:
             .partitionBy("_batch_id", "instance_id")
             .parquet(self.accumulator_path)
         )
-        if len(probe) <= self.max_isin_instances:
-            flat = self.accumulated_for([r["instance_id"] for r in probe])
-        else:
-            flat = self.accumulated_for_batch(batch_id)
-        out = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat))
+        out = iv_ops.output_table(self.accumulated_for(touched))
         (
             out.write.mode("overwrite")
             .option("partitionOverwriteMode", "dynamic")

@@ -112,7 +112,7 @@ def test_output_table_bracket_invariants_random_stream(spark, seed):
             }
         )
     flat = spark.createDataFrame(pd.DataFrame(rows))
-    out = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat)).toPandas()
+    out = iv_ops.output_table(flat).toPandas()
     non_ing = out[~out.query_type.isin(["insert", "copy"])]
     matched = non_ing[non_ing.last_write_table_insert.notna()]
     assert (matched.last_write_table_insert <= matched.arrival_timestamp).all()

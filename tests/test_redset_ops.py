@@ -200,7 +200,7 @@ class TestIntervals:
 
     def test_output_table_invariants(self, flat_df):
         """FIXTURES.md F4 invariants."""
-        out = iv_ops.output_table(flat_df, iv_ops.ingestion_intervals(flat_df))
+        out = iv_ops.output_table(flat_df)
         pdf = out.toPandas()
 
         # ingestion rows appear exactly once per distinct flat ingestion row
@@ -226,10 +226,7 @@ class TestIntervals:
         at an ingestion timestamp into both intervals (the fixture's +60-min
         select); we deliberately assign it to the newer interval only
         (SURVEY.md §7.2 documented divergence)."""
-        out = (
-            iv_ops.output_table(flat_df, iv_ops.ingestion_intervals(flat_df))
-            .toPandas()
-        )
+        out = iv_ops.output_table(flat_df).toPandas()
         con = _duckdb_con_with_flat()
         exp = con.execute(
             """
@@ -271,7 +268,7 @@ class TestIntervals:
 
 class TestWorkloadAndHistogram:
     def test_workload_null_vs_zero(self, flat_df):
-        out = iv_ops.output_table(flat_df, iv_ops.ingestion_intervals(flat_df))
+        out = iv_ops.output_table(flat_df)
         wl = wl_ops.tables_workload_count(out).toPandas()
         # write-only table 77: never matched (no ingestion interval) → absent;
         # tables 10/20 have both sides
@@ -280,7 +277,7 @@ class TestWorkloadAndHistogram:
         assert both["transform_count"].notna().all()
 
     def test_analytical_classifier(self, flat_df):
-        out = iv_ops.output_table(flat_df, iv_ops.ingestion_intervals(flat_df))
+        out = iv_ops.output_table(flat_df)
         wl = wl_ops.tables_workload_count(out)
         analytical = wl_ops.analytical_tables(wl).toPandas()
         # 12 selects vs 2 transforms per (instance, table) → share ≈ 0.857
@@ -288,7 +285,7 @@ class TestWorkloadAndHistogram:
         assert (analytical["percentage_select_queries"] > 0.8).all()
 
     def test_decile_histogram_sums(self, flat_df):
-        out = iv_ops.output_table(flat_df, iv_ops.ingestion_intervals(flat_df))
+        out = iv_ops.output_table(flat_df)
         wl = wl_ops.tables_workload_count(out)
         analytical = wl_ops.analytical_tables(wl)
         rel = hist_ops.relative_to_next(out, analytical).filter(
@@ -305,7 +302,7 @@ class TestWorkloadAndHistogram:
     def test_distributed_strategy_identical(self, flat_df):
         """decile_histogram(distributed=True) must equal the window-NTILE
         strategy exactly on the fixture."""
-        out = iv_ops.output_table(flat_df, iv_ops.ingestion_intervals(flat_df))
+        out = iv_ops.output_table(flat_df)
         wl = wl_ops.tables_workload_count(out)
         analytical = wl_ops.analytical_tables(wl)
         rel = hist_ops.relative_to_next(out, analytical).filter(
@@ -327,7 +324,7 @@ class TestWorkloadAndHistogram:
         assert a.equals(b)
 
     def test_percent_rank_decile_close_to_ntile(self, flat_df):
-        out = iv_ops.output_table(flat_df, iv_ops.ingestion_intervals(flat_df))
+        out = iv_ops.output_table(flat_df)
         wl = wl_ops.tables_workload_count(out)
         analytical = wl_ops.analytical_tables(wl)
         rel = hist_ops.relative_to_next(out, analytical).filter(

@@ -753,62 +753,6 @@ class TestIncrementalDedupStream:
         assert jsc.getPersistentRDDs().size() <= rdds_before
 
 
-class TestStatefulEMATws:
-    def test_transform_with_state_matches_batch_ema(self, spark, event_dir, tmp_path):
-        """The Spark 4 transformWithStateInPandas twin must produce the same
-        final per-key EMA as the batch fold (and therefore as the
-        applyInPandasWithState implementation, which is held to the same
-        batch parity below).
-
-        Environment gate: the TWS state-server protocol needs
-        google.protobuf (pyspark's transform_with_state_driver_worker
-        imports StateMessage_pb2), absent in this container and
-        uninstallable — same blocker class as the Kafka connector jar.
-        The processor logic itself is identical to make_ema_updater, which
-        IS exercised below."""
-        pytest.importorskip(
-            "google.protobuf",
-            reason="transformWithStateInPandas needs protobuf (state-server "
-            "protocol); absent in this environment",
-        )
-        spark.conf.set(
-            "spark.sql.streaming.stateStore.providerClass",
-            "org.apache.spark.sql.execution.streaming.state."
-            "RocksDBStateStoreProvider",
-        )
-        stream = sp.file_stream(spark, event_dir, EVENT_SCHEMA, max_files_per_trigger=1)
-        ema_stream = sp.stateful_ema_tws(
-            stream,
-            key_col="instance_id",
-            value_col="execution_duration_ms",
-            order_col="arrival_timestamp",
-            alpha_short=0.02,
-            alpha_long=0.005,
-        )
-        _run_to_memory(ema_stream, "ema_tws", tmp_path, output_mode="update")
-        got = (
-            spark.table("ema_tws")
-            .toPandas()
-            .groupby("key")
-            .last()["ema_short"]
-            .to_dict()
-        )
-        batch = spark.read.schema(EVENT_SCHEMA).parquet(event_dir)
-        exp = {
-            str(r["instance_id"]): r["ema"]
-            for r in ema_ops.ema_by_key(
-                batch,
-                ["instance_id"],
-                "arrival_timestamp",
-                "execution_duration_ms",
-                alpha=0.02,
-            ).collect()
-        }
-        assert set(got) == set(exp)
-        for k in exp:
-            assert abs(got[k] - exp[k]) < 1e-9, k
-
-
 class TestStatefulEMA:
     def test_matches_batch_ema(self, spark, event_dir, tmp_path):
         stream = sp.file_stream(spark, event_dir, EVENT_SCHEMA, max_files_per_trigger=1)
@@ -956,34 +900,6 @@ class TestCheckpointRecovery:
         )
 
 
-class TestHoppingBackfill:
-    def test_final_hop_equals_batch(self, spark):
-        """T4 loop: after the last hop the output equals the one-shot batch
-        output_table over the full range, and intermediate hops grow
-        monotonically."""
-        from datetime import datetime
-
-        from data_engineering_project_utn_spark.operators import intervals as iv_ops
-
-        flat = spark.createDataFrame(flat_rows())
-        start = datetime(2024, 3, 1, 0, 0, 0)
-        end = datetime(2024, 3, 1, 8, 0, 0)
-        sizes = []
-        last = None
-        for _cur, out in sp.hopping_backfill(flat, start, end, hop_hours=2.0):
-            sizes.append(out.count())
-            last = out
-        assert sizes == sorted(sizes)  # accumulated state only grows
-
-        full = flat.filter(
-            (F.col("arrival_timestamp") >= F.lit(start))
-            & (F.col("arrival_timestamp") < F.lit(end))
-        )
-        exp = iv_ops.output_table(full, iv_ops.ingestion_intervals(full))
-        assert last.exceptAll(exp).count() == 0
-        assert exp.exceptAll(last).count() == 0
-
-
 class TestSessionWindowStream:
     def test_session_window_stream_matches_batch_sessionization(
         self, spark, tmp_path
@@ -1088,7 +1004,7 @@ class TestIncrementalHistoricalPipeline:
 
         got = pipe.read_output()
         flat = spark.read.parquet(src)
-        exp = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat))
+        exp = iv_ops.output_table(flat)
         key = ["instance_id", "query_id", "arrival_timestamp", "last_write_table_insert"]
         g = got.select(*key).toPandas().sort_values(key).reset_index(drop=True)
         e = exp.select(*key).toPandas().sort_values(key).reset_index(drop=True)
@@ -1167,49 +1083,75 @@ class TestIncrementalHistoricalPipeline:
         assert after[hot_dir] >= before[hot_dir]
         # output for the untouched instance still matches the full recompute
         flat = spark.createDataFrame(flat_pdf)
-        exp = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat)).filter(
+        exp = iv_ops.output_table(flat).filter(
             F.col("instance_id") == cold
         )
         got = pipe.read_output().filter(F.col("instance_id") == cold)
         assert got.exceptAll(exp).count() == 0
         assert exp.exceptAll(got).count() == 0
 
-    def test_wide_batch_prunes_via_join_not_isin(self, spark, tmp_path):
-        """Above max_isin_instances the recompute must prune the accumulator
-        with a broadcast semi join: correct output, and neither a driver id
-        list nor an O(touched)-element In expression in the plan (the
-        wide-backfill failure mode of the isin path)."""
-        # "wide" is relative to the threshold: forcing max_isin_instances
-        # below the fixture's instance count exercises exactly the code path
-        # a millions-of-instances backfill takes, at test scale
-        flat_pdf = flat_rows()
+    def test_hops_grow_to_one_shot_output(self, spark, tmp_path):
+        """T4 loop (`Dashboard_Historical_Final.py:176-333`): 2-hour hops fed
+        through process_batch never shrink the output, and after the last
+        hop it equals the one-shot output_table over the full range."""
+        from datetime import datetime, timedelta
+
+        flat = spark.createDataFrame(flat_rows())
         pipe = sp.IncrementalHistoricalPipeline(
             spark,
             accumulator_path=str(tmp_path / "acc"),
             output_path=str(tmp_path / "out"),
-            max_isin_instances=1,
         )
-        pipe.process_batch(spark.createDataFrame(flat_pdf), 0)
-
-        pruned = pipe.accumulated_for_batch(0)
-        plan = pruned._jdf.queryExecution().executedPlan().toString()
-        assert "LeftSemi" in plan
-        import re
-
-        in_lists = re.findall(r"IN \(([^)]*)\)", plan) + re.findall(
-            r"instance_id#\d+ IN ", plan
-        )
-        # no touched-id In expression anywhere in the wide-path plan
-        assert not any("," in s for s in in_lists), in_lists
+        start = datetime(2024, 3, 1, 0, 0, 0)
+        sizes = []
+        for batch_id in range(4):
+            lo = start + timedelta(hours=2 * batch_id)
+            hop = flat.filter(
+                (F.col("arrival_timestamp") >= F.lit(lo))
+                & (F.col("arrival_timestamp") < F.lit(lo + timedelta(hours=2)))
+            )
+            pipe.process_batch(hop, batch_id)
+            sizes.append(pipe.read_output().count())
+        assert sizes == sorted(sizes) and sizes[0] < sizes[-1]
 
         got = pipe.read_output()
+        exp = iv_ops.output_table(flat)
+        assert got.exceptAll(exp).count() == 0
+        assert exp.exceptAll(got).count() == 0
+
+    def test_empty_batches_and_null_instances(self, spark, tmp_path):
+        """process_batch's guards: an empty first batch creates nothing, a
+        later empty batch leaves the output unchanged, and rows with a null
+        instance_id are recomputed as instance -1."""
+        import os
+
+        flat_pdf = flat_rows()
+        flat_pdf["instance_id"] = flat_pdf["instance_id"].astype("Int64")
+        flat_pdf.loc[flat_pdf["instance_id"] == 2, "instance_id"] = pd.NA
         flat = spark.createDataFrame(flat_pdf)
-        exp = iv_ops.output_table(flat, iv_ops.ingestion_intervals(flat))
+        empty = spark.createDataFrame([], flat.schema)
+        acc, out = str(tmp_path / "acc"), str(tmp_path / "out")
+        pipe = sp.IncrementalHistoricalPipeline(
+            spark, accumulator_path=acc, output_path=out
+        )
+
+        pipe.process_batch(empty, 0)
+        assert not os.path.exists(acc) and not os.path.exists(out)
+
+        pipe.process_batch(flat, 1)
         key = ["instance_id", "query_id", "arrival_timestamp", "last_write_table_insert"]
-        g = got.select(*key).toPandas().sort_values(key).reset_index(drop=True)
-        e = exp.select(*key).toPandas().sort_values(key).reset_index(drop=True)
-        assert len(g) == len(e) > 0
-        assert g.equals(e)
+        before = pipe.read_output().toPandas().sort_values(key).reset_index(drop=True)
+        pipe.process_batch(empty, 2)
+        after = pipe.read_output().toPandas().sort_values(key).reset_index(drop=True)
+        assert before.equals(after)
+
+        assert -1 in set(before["instance_id"])
+        got = pipe.read_output()
+        exp = iv_ops.output_table(
+            flat.withColumn("instance_id", F.coalesce("instance_id", F.lit(-1)))
+        )
+        assert got.exceptAll(exp).count() == 0
+        assert exp.exceptAll(got).count() == 0
 
 
 class TestCurationStream:
